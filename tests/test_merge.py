@@ -65,6 +65,10 @@ def test_impute_scenario_buckets(spark, tmp_table_root):
     assert set(acc) == {"role", "tool", "text"}
     for col, stats in acc.items():
         assert stats["buckets"], col
+        # the default ctx=None call path must actually hit the index (a
+        # key-encoding mismatch between build and probe degrades every
+        # cell to an estimate without raising)
+        assert stats["buckets"].get("index", {}).get("n", 0) > 0, col
         # index-path accuracy must dominate estimate-path accuracy
         b = stats["buckets"]
         if "index" in b and "estimate" in b and b["estimate"]["n"] >= 3:
@@ -272,45 +276,38 @@ def test_sparse_prune_empty_frame_keeps_columns(spark):
     assert out.count() == 0
 
 
-def test_impute_sig_hash_mode_matches_md5_mode(spark, tmp_path, monkeypatch):
-    """The long-xxhash64 sig representation (ENGINE_SIG_HASH, r7 merge-pass
-    default) must impute the same cells as the md5-string representation:
-    identical role/tool values everywhere (their candidates are the raw
-    strings in both modes) and text non-null with the same provenance
-    counts. Text VALUES may differ only where the rank-1 winner is a tie
-    broken by candidate ordering (hex vs decimal sort), so they are
-    compared through evaluate_impute accuracy instead of byte equality."""
+def test_impute_with_offline_index_matches_default(spark, tmp_path):
+    """The offline-index → online-probe seam: a top-3 index built from a
+    plain scan and passed as ``cand_idx`` must impute exactly what the
+    merge pass's own rank-1 index does (one key encoding, and the k>1
+    window breaks ties like the k=1 aggregate)."""
+    from engine.index import build_candidate_index
     df = generate_transcripts(spark, num_convs=60)
-    injected, wl = inject_missing(df)
-    outs = {}
-    for mode in ("1", "0"):
-        monkeypatch.setenv("ENGINE_SIG_HASH", mode)
-        root = str(tmp_path / f"tbl_{mode}")
-        t = Table.create(root)
+    injected, _ = inject_missing(df)
+    outs = []
+    for name in ("default", "offline"):
+        t = Table.create(str(tmp_path / name))
         append(t, injected, num_files=4,
                range_cols=["conv_id", "turn_idx"],
                sort_cols=["conv_id", "turn_idx"])
-        impute_merge(spark, t, pass_id="p1")
-        outs[mode] = scan(spark, t)
-    for mode, out in outs.items():
-        assert out.filter("role is null or text is null").count() == 0, mode
-    a = sorted_rows(outs["1"].select("conv_id", "turn_idx", "role", "tool"))
-    b = sorted_rows(outs["0"].select("conv_id", "turn_idx", "role", "tool"))
-    assert a == b
-    acc1 = evaluate_impute(outs["1"], wl)
-    acc0 = evaluate_impute(outs["0"], wl)
-    assert abs(acc1["text"]["acc"] - acc0["text"]["acc"]) < 0.02
+        idx = (build_candidate_index(scan(spark, t), k=3)
+               if name == "offline" else None)
+        impute_merge(spark, t, pass_id="p1", cand_idx=idx)
+        outs.append(sorted_rows(scan(spark, t)))
+    assert outs[0] == outs[1]
 
 
 def test_scored_pairs_sig_hash_is_hash_aggregate_no_concat(spark):
-    """The component-hashed explode (hashed_families on a sig_hash context)
-    must stay a partial+final HashAggregate and must NOT build composite
-    key strings (no concat_ws in the plan) — the r7 narrow-key invariant."""
+    """The component-hashed explode must stay a partial+final HashAggregate
+    and must NOT build composite key strings (no concat_ws in the plan) —
+    the narrow-key invariant: every key is a long hashed straight from the
+    long text sigs and role components."""
     from engine.index import _scored_pairs, _with_context
     from tests.test_plans import plan_of
-    p = plan_of(_scored_pairs(
-        _with_context(generate_transcripts(spark, num_convs=5),
-                      sig_hash=True), hash_keys=True))
+    pairs = _scored_pairs(
+        _with_context(generate_transcripts(spark, num_convs=5)))
+    assert dict(pairs.dtypes)["key"] == "bigint"
+    p = plan_of(pairs)
     assert "HashAggregate" in p
     assert "SortAggregate" not in p
     assert "concat_ws" not in p

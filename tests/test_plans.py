@@ -135,13 +135,16 @@ def test_scored_pairs_is_hash_aggregate(spark):
     """The widest aggregation of the merge pass must stay a HashAggregate:
     a string/struct-typed aggregate buffer (e.g. a min(pointer)) silently
     demotes it to a SortAggregate over the full exploded pair set (+2.5×
-    measured). Guard the regression."""
+    measured). Guard the regression. The keys are component-hashed longs:
+    no composite key string (concat_ws) and no md5 sig is ever built."""
     from engine.index import _scored_pairs, _with_context
     from engine.synth import generate_transcripts
     p = plan_of(_scored_pairs(_with_context(
         generate_transcripts(spark, num_convs=5))))
     assert "HashAggregate" in p
     assert "SortAggregate" not in p
+    assert "concat_ws" not in p
+    assert "md5" not in p
 
 
 def test_mor_scan_plans(spark, tmp_path):
